@@ -9,8 +9,9 @@ dict (``:115-119``), upsert with refreshed confidence (``:275-280``).
 from __future__ import annotations
 
 import datetime as dt
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.relational import following_profiles, pending_users
@@ -97,15 +98,25 @@ def _categorize_edges(
     return validate_results(attributed, interest_categories)
 
 
+@dataclass(frozen=True)
+class InterestMerge:
+    """An interests upsert ready to store: the merged table contents and
+    the size of the batch merged into it, known before the write."""
+
+    table: DataFrame
+    incoming: int  # (user, category) results merged
+    new: int       # of those, keys the table did not hold before
+
+
 def _upsert_interest_results(
     interests: DataFrame,
     validated: DataFrame,
     ts,
     next_id_start: int = 0,
-) -> DataFrame:
+) -> InterestMerge:
     """A1 tail of _store_interest_results (interest_analyzer.py:257-280):
     collapse per-key collisions, preserve SERIAL ids across the upsert,
-    mint fresh ids for new keys. Returns the merged interests table."""
+    mint fresh ids for new keys."""
     # The reference's per-row ON CONFLICT keeps the last-processed result
     # when several followed accounts land in the same (user, category);
     # its scan order is unspecified, so collapse deterministically to the
@@ -113,39 +124,54 @@ def _upsert_interest_results(
     collapsed = validated.groupBy("user_id", "category_id").agg(
         F.max("confidence_score").alias("confidence_score")
     )
-    incoming = collapsed.withColumn("created_at", ts)
-    if incoming.isEmpty():
-        return interests
     # ON CONFLICT DO UPDATE preserves the row's SERIAL id: inherit the
-    # existing surrogate id per key, then mint fresh ids above the current
-    # max for brand-new keys. max(id) is a footer-stats scan; the dense
-    # row_number only runs over the new-key batch (≤ limit users × #cats).
+    # existing surrogate id per key; brand-new keys get fresh ids below.
     prev_ids = interests.select(
         "user_id", "category_id", F.col("id").alias("_prev_id")
     )
+    # Materialize the model's answers once: the counts, the id assignment
+    # and the write all read these rows, so each followed profile goes
+    # through the categorizer once per call, and a non-deterministic
+    # model (a live LLM) cannot give the ids one set of answers and the
+    # write another. The checkpoint's own job fills the counts. Its rows
+    # live in executor storage (≤ analyzed users × categories of them).
+    counts = Observation()
     incoming = (
-        incoming.join(prev_ids, ["user_id", "category_id"], "left")
-        .withColumn("id", F.col("_prev_id"))
-        .drop("_prev_id")
+        collapsed.withColumn("created_at", ts)
+        .join(prev_ids, ["user_id", "category_id"], "left")
+        .observe(
+            counts,
+            F.count(F.lit(1)).alias("incoming"),
+            F.count_if(F.col("_prev_id").isNull()).alias("new"),
+        )
+        .localCheckpoint(eager=True)
     )
+    n = counts.get
+    if n["incoming"] == 0:
+        return InterestMerge(interests, 0, 0)
+    # max(id) is a footer-stats scan; the dense row_number only runs
+    # over the new-key batch (≤ limit users × #cats).
     if next_id_start <= 0:
         max_id = interests.agg(F.max("id").alias("m")).first()["m"]
         next_id_start = int(max_id or 0) + 1
-    have_id = incoming.filter(F.col("id").isNotNull())
+    have_id = incoming.filter(F.col("_prev_id").isNotNull()).withColumn(
+        "id", F.col("_prev_id")
+    )
     need_id = assign_dense_ids(
-        incoming.filter(F.col("id").isNull()).drop("id"),
+        incoming.filter(F.col("_prev_id").isNull()).drop("_prev_id"),
         "id",
         order_by=["user_id", "category_id"],
         start=next_id_start,
+        rows=n["new"],
     )
     cols = ["id", "user_id", "category_id", "confidence_score", "created_at"]
-    incoming = have_id.select(*cols).unionByName(need_id.select(*cols))
-    return upsert_keep_newest(
+    merged = upsert_keep_newest(
         interests,
-        incoming,
+        have_id.select(*cols).unionByName(need_id.select(*cols)),
         keys=["user_id", "category_id"],
         order_col="created_at",
     )
+    return InterestMerge(merged, n["incoming"], n["new"])
 
 
 def analyze_user_interests(
@@ -167,6 +193,32 @@ def analyze_user_interests(
     target = users.filter(F.col("username") == username).select("user_id")
     edges = following.join(target, "user_id", "left_semi")
     validated = _categorize_edges(users, edges, interest_categories, categorizer)
+    return _upsert_interest_results(interests, validated, ts, next_id_start).table
+
+
+def merge_pending_interests(
+    users: DataFrame,
+    following: DataFrame,
+    scrape_jobs: DataFrame,
+    interests: DataFrame,
+    interest_categories: DataFrame,
+    categorizer: Categorizer | None = None,
+    limit: int = 5,
+    now: dt.datetime | None = None,
+    next_id_start: int = 0,
+) -> InterestMerge:
+    """The --mode analysis lifecycle (SURVEY §3.3): J3 pending anti-join
+    -> J2 profile join -> U1 model batches -> U2 validation -> A1 upsert.
+    Returns the merged interests table with the batch's row counts."""
+    ts = F.lit(now or dt.datetime(2024, 1, 1)).cast("timestamp")
+    pending = pending_users(users, scrape_jobs, interests, limit=limit)
+    # set-based version of the reference's per-user loop
+    # (interest_analyzer.py:285-315): all pending users' following edges
+    # flow through ONE model pass — same semantics, one job
+    edges = following.join(
+        pending.select("user_id"), "user_id", "left_semi"
+    )
+    validated = _categorize_edges(users, edges, interest_categories, categorizer)
     return _upsert_interest_results(interests, validated, ts, next_id_start)
 
 
@@ -181,16 +233,10 @@ def analyze_pending_users(
     now: dt.datetime | None = None,
     next_id_start: int = 0,
 ) -> DataFrame:
-    """The --mode analysis lifecycle (SURVEY §3.3): J3 pending anti-join
-    -> J2 profile join -> U1 model batches -> U2 validation -> A1 upsert.
-    Returns the new interests table contents."""
-    ts = F.lit(now or dt.datetime(2024, 1, 1)).cast("timestamp")
-    pending = pending_users(users, scrape_jobs, interests, limit=limit)
-    # set-based version of the reference's per-user loop
-    # (interest_analyzer.py:285-315): all pending users' following edges
-    # flow through ONE model pass — same semantics, one job
-    edges = following.join(
-        pending.select("user_id"), "user_id", "left_semi"
-    )
-    validated = _categorize_edges(users, edges, interest_categories, categorizer)
-    return _upsert_interest_results(interests, validated, ts, next_id_start)
+    """:func:`merge_pending_interests`, returning only the new interests
+    table contents."""
+    return merge_pending_interests(
+        users, following, scrape_jobs, interests, interest_categories,
+        categorizer=categorizer, limit=limit, now=now,
+        next_id_start=next_id_start,
+    ).table

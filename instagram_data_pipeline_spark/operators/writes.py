@@ -21,7 +21,9 @@ signatures would not change.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -53,6 +55,19 @@ def upsert_keep_newest(
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
+
+
+def observe_count(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with a row counter attached, plus a getter for the count.
+
+    The counter is a pyspark ``Observation``: the first action over the
+    returned frame (typically the write that stores it) fills it, so the
+    count costs no second evaluation of ``df``'s plan — the G2
+    affected-rowcount without a separate ``count()``. The getter blocks
+    until that action has run."""
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    return counted, lambda: obs.get["rows"]
 
 
 def insert_if_absent(
@@ -88,16 +103,18 @@ DENSE_ID_MAX_ROWS = 1_000_000
 
 def assign_dense_ids(df: DataFrame, id_col: str, order_by: list[str],
                      start: int = 1,
-                     max_rows: int = DENSE_ID_MAX_ROWS) -> DataFrame:
+                     max_rows: int = DENSE_ID_MAX_ROWS,
+                     rows: int | None = None) -> DataFrame:
     """Dense variant for small control tables (ledger) where tests expect
     consecutive ids: a global no-partition row_number, i.e. a
     SINGLE-PARTITION shuffle.
 
     Guarded against misuse on fact tables: refuses inputs above
-    ``max_rows`` (the count probe is one cheap agg-only job). For big
-    tables use :func:`assign_ids` — unique but not dense — which is the
-    documented SERIAL contract (SURVEY §7.2)."""
-    n = df.count()
+    ``max_rows`` (the count probe is one cheap agg-only job; a caller
+    that already knows ``df``'s row count passes it as ``rows`` and
+    skips the probe). For big tables use :func:`assign_ids` — unique but
+    not dense — which is the documented SERIAL contract (SURVEY §7.2)."""
+    n = df.count() if rows is None else rows
     if n > max_rows:
         raise ValueError(
             f"assign_dense_ids is a single-partition global sort, refused "

@@ -14,10 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analysis.categorizer import Categorizer
-from ..analysis.interests import analyze_pending_users, default_categories
+from ..analysis.interests import default_categories, merge_pending_interests
 from ..io import Warehouse
 from ..operators.mutuals import mutual_edges
-from ..operators.writes import insert_if_absent, upsert_keep_newest
+from ..operators.writes import (
+    insert_if_absent,
+    observe_count,
+    upsert_keep_newest,
+)
 from ..schemas import REFERENCE_TABLES
 
 
@@ -55,7 +59,11 @@ class Pipeline:
     def append_edges(self, table: str, incoming: DataFrame,
                      edge_col: str) -> int:
         """Insert-if-absent edges + stub rows for unseen endpoint users
-        (instagram_scraper.py:260-278: every endpoint gets a users row)."""
+        (instagram_scraper.py:260-278: every endpoint gets a users row).
+
+        Each delta is counted by the staged write that stores it, and an
+        empty delta discards the staged copy: the table keeps its files.
+        Returns the number of new edges."""
         users = self.wh.read("users")
         stub_ids = (
             incoming.select(F.col(edge_col).alias("user_id"))
@@ -76,18 +84,21 @@ class Pipeline:
                 self._ts().alias("last_updated"),
             )
         )
-        if not stubs.isEmpty():
-            self.wh.overwrite_atomic(
-                "users", users.unionByName(stubs)
-            )
+        # Stubs are usually none once the graph's users are known, so
+        # materialize the (small) stub set and count it in that one pass,
+        # rather than staging the whole users table only to drop it.
+        stubs, n_stubs = observe_count(stubs)
+        stubs = stubs.localCheckpoint(eager=True)
+        if n_stubs():
+            self.wh.overwrite_atomic("users", users.unionByName(stubs))
         existing = self.wh.read(table)
-        new_edges = insert_if_absent(
-            existing, incoming, keys=["user_id", edge_col]
+        new_edges, n_new = observe_count(
+            insert_if_absent(existing, incoming, keys=["user_id", edge_col])
         )
-        n = new_edges.count()
-        if n:
-            self.wh.overwrite_atomic(table, existing.unionByName(new_edges))
-        return n
+        self.wh.overwrite_atomic(
+            table, existing.unionByName(new_edges), keep=lambda: n_new() > 0
+        )
+        return n_new()
 
     # -- stage 4: mutuals (J1 -> A2, instagram_scraper.py:413-444) --------
     def derive_mutuals(self, user_id: str | None = None) -> int:
@@ -100,16 +111,18 @@ class Pipeline:
             self._ts().alias("created_at"),
         )
         existing = self.wh.read("mutuals")
-        new_rows = insert_if_absent(existing, derived, ["user_id", "mutual_id"])
-        n = new_rows.count()  # G2: affected-rowcount metric
-        if n:
-            self.wh.overwrite_atomic("mutuals", existing.unionByName(new_rows))
-        return n
+        new_rows, n_new = observe_count(  # G2: affected-rowcount metric
+            insert_if_absent(existing, derived, ["user_id", "mutual_id"])
+        )
+        self.wh.overwrite_atomic(
+            "mutuals", existing.unionByName(new_rows), keep=lambda: n_new() > 0
+        )
+        return n_new()
 
     # -- stage 5: interests (U1/U2 -> A1) ---------------------------------
     def analyze_interests(self, categorizer: Categorizer | None = None,
                           limit: int = 5) -> int:
-        merged = analyze_pending_users(
+        merge = merge_pending_interests(
             self.wh.read("users"),
             self.wh.read("following"),
             self.wh.read("scrape_jobs"),
@@ -119,9 +132,9 @@ class Pipeline:
             limit=limit,
             now=self.now,
         )
-        before = self.wh.read("interests").count()
-        self.wh.overwrite_atomic("interests", merged)
-        return self.wh.read("interests").count() - before
+        if merge.incoming:
+            self.wh.overwrite_atomic("interests", merge.table)
+        return merge.new
 
     # -- the 5-stage DAG --------------------------------------------------
     def run_manual(

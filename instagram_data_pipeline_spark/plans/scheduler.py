@@ -22,10 +22,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import Warehouse
-from ..operators.relational import completed_scrape_count, dequeue_pending
-from ..operators.writes import assign_dense_ids, update_job_status
+from ..operators.relational import both_complete_users, dequeue_pending
+from ..operators.writes import update_job_status
 
 JOB_TYPES = ("profile", "followers", "following")
+
+
+def _started_after(cutoff: dt.datetime, job_types: tuple[str, ...]):
+    """P5 guard predicate: a scrape job of ``job_types`` started after
+    ``cutoff``."""
+    return F.col("job_type").isin(*job_types) & (
+        F.col("started_at") > F.lit(cutoff).cast("timestamp")
+    )
 
 
 def enqueue_due(
@@ -42,10 +50,7 @@ def enqueue_due(
     cross join against a literal 3-row frame (harmless at any scale)."""
     spark = candidates.sparkSession
     recent = (
-        jobs.filter(
-            F.col("job_type").isin(*job_types)
-            & (F.col("started_at") > F.lit(cutoff).cast("timestamp"))
-        )
+        jobs.filter(_started_after(cutoff, job_types))
         .select("target_username")
         .dropDuplicates()
     )
@@ -90,21 +95,44 @@ class JobScheduler:
     # -- A7: conditional enqueue (job_scheduler.py:49-77) -----------------
     def enqueue_users(self, usernames: list[str]) -> int:
         """Enqueue the 3 scrape job types per user unless a job of any
-        scrape type started within the last 7 days (P5 guard)."""
+        scrape type started within the last 7 days (P5 guard).
+
+        One aggregate pass over the ledger finds its max ``job_id`` and
+        which candidates were scraped recently; the ≤ 3 × users new rows
+        are then built on the driver with dense ids in ``(username,
+        job_type)`` order — the same rows :func:`enqueue_due` plus
+        ``assign_dense_ids`` would produce, without running that plan."""
+        candidates = sorted(set(usernames))
+        if not candidates:
+            return 0
         jobs = self._jobs()
-        candidates = self.spark.createDataFrame(
-            [(u,) for u in usernames], "target_username string"
-        )
-        new_jobs = enqueue_due(jobs, candidates, self.now - dt.timedelta(days=7))
-        max_id = jobs.agg(F.coalesce(F.max("job_id"), F.lit(0))).collect()[0][0]
-        new_jobs = assign_dense_ids(
-            new_jobs, "job_id", order_by=["target_username", "job_type"],
-            start=int(max_id) + 1,
-        ).select(*jobs.columns)
-        n = new_jobs.count()
-        if n:
-            self.wh.overwrite_atomic("scrape_jobs", jobs.unionByName(new_jobs))
-        return n
+        cutoff = self.now - dt.timedelta(days=7)
+        seen = jobs.agg(
+            F.coalesce(F.max("job_id"), F.lit(0)).alias("max_id"),
+            F.collect_set(
+                F.when(
+                    F.col("target_username").isin(*candidates)
+                    & _started_after(cutoff, JOB_TYPES),
+                    F.col("target_username"),
+                )
+            ).alias("recent"),
+        ).first()
+        recent = set(seen["recent"])
+        due = [
+            (u, t) for u in candidates if u not in recent
+            for t in sorted(JOB_TYPES)
+        ]
+        if not due:
+            return 0
+        new_jobs = self.spark.createDataFrame(
+            [
+                (job_id, u, t, "pending", None, None, None, None, 0, None)
+                for job_id, (u, t) in enumerate(due, start=seen["max_id"] + 1)
+            ],
+            jobs.schema,
+        ).coalesce(1)  # one partition, so the staged write adds one file
+        self.wh.overwrite_atomic("scrape_jobs", jobs.unionByName(new_jobs))
+        return len(due)
 
     # -- T3: daily quota (job_scheduler.py:29-47, 84-86) ------------------
     def quota_used_today(self) -> int:
@@ -157,10 +185,19 @@ class JobScheduler:
             )
             stats["completed"] += 1
         self.wh.overwrite_atomic("scrape_jobs", jobs)
-        # T7: after edge scrapes, fire mutuals when both types completed
-        if on_both_complete:
-            for row in rows:
-                if row.job_type in ("followers", "following"):
-                    if completed_scrape_count(self._jobs(), row.target_username) >= 2:
-                        on_both_complete(row.target_username)
+        # T7: after edge scrapes, fire mutuals when both types completed —
+        # once per dequeued edge-job row of such a user, decided by one
+        # query over the tick's users against the ledger just written
+        edge_rows = [r for r in rows if r.job_type in ("followers", "following")]
+        if on_both_complete and edge_rows:
+            names = {r.target_username for r in edge_rows}
+            done = {
+                r.target_username
+                for r in both_complete_users(
+                    self._jobs().filter(F.col("target_username").isin(*names))
+                ).collect()
+            }
+            for row in edge_rows:
+                if row.target_username in done:
+                    on_both_complete(row.target_username)
         return stats

@@ -5,13 +5,21 @@ reference's tests/test_pipeline.py integration suite, hermetic."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
+from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from instagram_data_pipeline_spark.plans.manual import Pipeline
 from instagram_data_pipeline_spark.plans.scheduler import JobScheduler
-from instagram_data_pipeline_spark.schemas import FOLLOWERS, FOLLOWING, USERS
+from instagram_data_pipeline_spark.schemas import (
+    FOLLOWERS,
+    FOLLOWING,
+    SCRAPE_JOBS,
+    USERS,
+)
 from instagram_data_pipeline_spark.testing import fixture_edges, fixture_users
 
 NOW = dt.datetime(2024, 1, 20, 12, 0, 0)
@@ -145,3 +153,141 @@ def test_completeness_trigger_fires_mutuals(spark, pipeline, sched):
     # (once per completed edge-job row, T7)
     assert fired == ["instagram", "instagram"]
     assert pipeline.derive_mutuals("12345") == 2
+
+
+# ---------------------------------------------------------------------------
+# Each stage evaluates its plan once
+# ---------------------------------------------------------------------------
+
+
+def _table_files(pipeline, table):
+    """(name, size) of every file in a table's directory."""
+    root = Path(pipeline.wh.path(table))
+    return sorted((p.name, p.stat().st_size) for p in root.iterdir())
+
+
+def _seed_landed(spark, pipeline):
+    followers, following = fixture_edges(spark)
+    pipeline.upsert_profiles(fixture_users(spark))
+    pipeline.append_edges("followers", followers, "follower_id")
+    pipeline.append_edges("following", following, "following_id")
+    return followers, following
+
+
+def _complete_following_jobs(spark, pipeline, usernames):
+    jobs = spark.createDataFrame(
+        [(i, u, "following", "completed", NOW, NOW, None, None, 0, None)
+         for i, u in enumerate(usernames, start=1)],
+        SCRAPE_JOBS,
+    )
+    pipeline.wh.overwrite_atomic("scrape_jobs", jobs)
+
+
+def test_zero_delta_leaves_table_files_untouched(spark, pipeline):
+    followers, _ = _seed_landed(spark, pipeline)
+    assert pipeline.derive_mutuals() == 2
+    _complete_following_jobs(spark, pipeline, ["instagram"])
+    assert pipeline.analyze_interests() > 0
+    tables = ("users", "followers", "mutuals", "interests")
+    before = {t: _table_files(pipeline, t) for t in tables}
+    # a re-landed batch, a re-derivation and a drained pending set are
+    # all empty deltas: counts are 0 and no table is rewritten
+    assert pipeline.append_edges("followers", followers, "follower_id") == 0
+    assert pipeline.derive_mutuals() == 0
+    assert pipeline.analyze_interests() == 0
+    assert {t: _table_files(pipeline, t) for t in tables} == before
+    assert not any(Path(pipeline.wh.path(t) + ".tmp").exists() for t in tables)
+
+
+def test_analyze_interests_categorizes_each_profile_once(spark, pipeline):
+    """The model's answers are materialized once per call: the id
+    assignment and the write read the same rows, so every followed
+    profile goes through the categorizer exactly once — also when two
+    analyzed users follow the same account (foodlover)."""
+    from pyspark.accumulators import AccumulatorParam
+
+    from instagram_data_pipeline_spark.analysis.categorizer import (
+        KeywordCategorizer,
+    )
+
+    class CounterParam(AccumulatorParam):
+        def zero(self, value):
+            return Counter()
+
+        def addInPlace(self, a, b):
+            a.update(b)
+            return a
+
+    class CountingCategorizer:  # runs in the Python workers
+        def __init__(self, seen):
+            self.seen = seen
+            self.inner = KeywordCategorizer()
+
+        def categorize(self, records):
+            self.seen.add(Counter(r["username"] for r in records))
+            return self.inner.categorize(records)
+
+    _seed_landed(spark, pipeline)
+    _complete_following_jobs(spark, pipeline, ["instagram", "lurker"])
+    seen = spark.sparkContext.accumulator(Counter(), CounterParam())
+    assert pipeline.analyze_interests(CountingCategorizer(seen)) == 4
+    assert seen.value == Counter(
+        {"fashionaccount": 1, "techguru": 1, "foodlover": 1, "fan_one": 1}
+    )
+
+
+def test_enqueue_dedupes_and_continues_ids_densely(spark, pipeline, sched):
+    old = NOW - dt.timedelta(days=30)  # outside the 7-day guard
+    pipeline.wh.overwrite_atomic("scrape_jobs", spark.createDataFrame(
+        [(41, "zed", "profile", "completed", old, old, None, None, 0, None)],
+        SCRAPE_JOBS,
+    ))
+    assert sched.enqueue_users([]) == 0
+    assert sched.enqueue_users(["a", "a"]) == 3
+    assert sched.enqueue_users(["zed", "c", "b"]) == 9
+    jobs = pipeline.wh.read("scrape_jobs").orderBy("job_id").collect()
+    types = ["followers", "following", "profile"]
+    assert [(r.job_id, r.target_username, r.job_type) for r in jobs[1:]] == [
+        (42 + i, u, t) for i, (u, t) in enumerate(
+            (u, t) for u in ("a", "b", "c", "zed") for t in types)
+    ]
+    assert {r.status for r in jobs[1:]} == {"pending"}
+
+
+# One scheduled round of the fixture user: enqueue, a tick landing the
+# profile and both edge lists, the mutuals trigger, interest analysis.
+# Evaluating a stage's plan more than once shows up here first: the same
+# round ran 116 Spark jobs when each stage's counts came from separate
+# count()/isEmpty() actions and the model's answers were re-derived per
+# action; evaluating each plan once, it runs 58.
+ROUND_JOB_BUDGET = 58
+
+
+def test_scheduled_round_job_budget(spark, pipeline, sched):
+    pipeline.upsert_profiles(fixture_users(spark))
+    followers, following = fixture_edges(spark)
+    sc = spark.sparkContext
+    group = f"round-budget-{uuid.uuid4()}"
+    landed = {
+        "profile": lambda u: pipeline.upsert_profiles(_profile(spark)),
+        "followers": lambda u: pipeline.append_edges(
+            "followers", followers, "follower_id"),
+        "following": lambda u: pipeline.append_edges(
+            "following", following, "following_id"),
+    }
+    fired = []
+
+    def both_complete(u):
+        if not fired:
+            fired.append(pipeline.derive_mutuals())
+
+    sc.setJobGroup(group, "one scheduled round")
+    try:
+        assert sched.enqueue_users(["instagram"]) == 3
+        assert sched.process_pending_jobs(landed, both_complete)["completed"] == 3
+        assert pipeline.analyze_interests() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert fired == [2]
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= ROUND_JOB_BUDGET, jobs
